@@ -693,25 +693,7 @@ object Bench {
     val runSnap0 = graft.tools.HostStat.snap()
     val wall0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf, must be on the builder: see GraftSession.configure
-      .config("spark.sql.codegen.cache.maxEntries", "12000")
-      // partition-listing metadata cache sized for the FULL catalog's
-      // listing set (206 queries × tables + the persisted index dirs,
-      // each with ~64-200 `bucket=`/generation partition dirs). At the
-      // 250 MB default the cache EVICTS mid-run and the next index read
-      // re-lists in a 1-stage job — the q84/q93/q157 per-rep stage/job
-      // wobble (19,19,19,20,19,19) both r14 and r15 flagged, plus the
-      // "Evicting cached table partition metadata" WARN in the driver
-      // tail. A real deployment sizes this cache to its table count for
-      // exactly this reason (plan-invariant re-reads).
-      .config("spark.sql.hive.filesourcePartitionFileCacheSize", 1073741824L)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     // targeted repro loops (the q81 flight-recorder hunt needs dozens of
     // same-session reps of ONE query): SPARK_GRAFT_BENCH_ONLY=<prefix,...>
     // restricts the catalog; unset = the full driver surface

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * SparkSession.Builder#withExtensions(new GraftExtensions) ...
   * }}}
   *
   * Injects every graft SQL function ([[graft.functions.sqlFunctions]] —

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** `hll_sketch(hash64Col, p)` → binary register array.
   *
@@ -20,39 +18,11 @@ case class HllSketchAgg(
     precision: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
-
-  require(precision >= HyperLogLogPP.MinPrecision && precision <= HyperLogLogPP.MaxPrecision,
-    s"hll_sketch precision must be in [4,16], got $precision")
-
-  private val m: Int = 1 << precision
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](m)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val hash = v.asInstanceOf[Long]
-      val idx = (hash >>> (64 - precision)).toInt
-      val w = hash << precision
-      val rank = if (w == 0L) (64 - precision + 1) else java.lang.Long.numberOfLeadingZeros(w) + 1
-      if (rank > buf(idx)) buf(idx) = rank.toByte
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < m) { if (other(i) > buf(i)) buf(i) = other(i); i += 1 }
-    buf
-  }
+  extends HllHashAggregate {
 
   override def eval(buf: Array[Byte]): Any = buf.clone()
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "hll_sketch"
   override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -68,35 +38,19 @@ case class HllMergeAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] with UnaryLike[Expression] {
+  extends HllAggregate {
 
   override def createAggregationBuffer(): Array[Byte] = Array.emptyByteArray
 
-  private def mergeInto(buf: Array[Byte], other: Array[Byte]): Array[Byte] = {
-    if (other.isEmpty) return buf
-    if (buf.isEmpty) return other.clone()
-    require(buf.length == other.length,
-      s"cannot merge HLL sketches of different precision (${buf.length} vs ${other.length})")
-    var i = 0
-    while (i < buf.length) { if (other(i) > buf(i)) buf(i) = other(i); i += 1 }
-    buf
-  }
-
   override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
     val v = child.eval(input)
-    if (v == null) buf else mergeInto(buf, v.asInstanceOf[Array[Byte]])
+    if (v == null) buf else HllRegisters.maxInto(buf, v.asInstanceOf[Array[Byte]])
   }
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] =
-    mergeInto(buf, other)
 
   override def eval(buf: Array[Byte]): Any =
     if (buf.isEmpty) 0L else HyperLogLogPP.estimate(buf)
 
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
   override def prettyName: String = "hll_merge"
   override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -107,9 +61,6 @@ case class HllMergeAgg(
 }
 
 object HllSketchAgg {
-  def builder(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(c) => HllSketchAgg(Cast(c, LongType), HyperLogLogPP.DefaultPrecision)
-    case Seq(c, Literal(p: Int, IntegerType)) => HllSketchAgg(Cast(c, LongType), p)
-    case _ => throw new IllegalArgumentException("hll_sketch expects (col[, precision])")
-  }
+  def builder(exprs: Seq[Expression]): Expression =
+    HllRegisters.builder("hll_sketch", HllSketchAgg(_, _))(exprs)
 }

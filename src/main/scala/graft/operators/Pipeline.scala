@@ -1265,9 +1265,7 @@ object Pipeline {
       .drop(langCol + "_b", "__t1", "__t2", "n_oov", "lm_score")
   }
 
-  /** Fixed-point scale for the BM25 idf quantization (shared with the
-    * persisted-postings serve path, [[RetrievalIndex]] — the two scorers
-    * must stay bit-identical or serve-from-index drifts from fresh). */
+  /** Fixed-point scale for the BM25 idf quantization ([[Bm25.score]]). */
   private[graft] val Bm25Scale = 4096L
 
   /** Quantized log2 at 1/16-bit resolution as a SQL fragment over a
@@ -1308,16 +1306,9 @@ object Pipeline {
       queryTextCol: String,
       corpusIdCol: String,
       corpusTextCol: String,
-      k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    bm25Scores(queries, corpus, queryIdCol, queryTextCol, corpusIdCol, corpusTextCol)
-      .groupBy(col("query_id"))
-      .agg(graft.functions.top_k(
-        struct(col("score"), (-col("doc_id")).as("nid")), k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("query_id"), (col("__i") + 1).cast("int").as("rnk"),
-        (-col("__s.nid")).as("doc_id"), col("__s.score"))
-  }
+      k: Int): DataFrame =
+    Bm25.topK(k)(
+      bm25Scores(queries, corpus, queryIdCol, queryTextCol, corpusIdCol, corpusTextCol))
 
   /** The scored (query_id, doc_id, score > 0) set behind [[bm25TopK]],
     * BEFORE the top-k cut — what threshold consumers (retrieval-based
@@ -1330,15 +1321,6 @@ object Pipeline {
       queryTextCol: String,
       corpusIdCol: String,
       corpusTextCol: String): DataFrame = {
-    // null surgery (the charNgramPairs device): the explicit cheap
-    // IsNotNull pre-filter keeps semantics, and coalesce makes the
-    // tokenize chain NON-NULLABLE so constraint propagation cannot infer
-    // an isnotnull(tokens_scan(…)) filter that would re-run the kernel
-    // below the next exchange
-    val c = corpus.filter(col(corpusTextCol).isNotNull)
-      .select(col(corpusIdCol).cast("long").as("doc_id"),
-        graft.functions.tokens_fast(coalesce(col(corpusTextCol), lit(""))).as("__toks"))
-      .withColumn("dl", size(col("__toks")).cast("long"))
     // explode_outer + a cheap term filter, NOT plain explode: Generate's
     // implied non-empty-array constraint would be inferred as a
     // size(tokens_scan(…)) > 0 filter and pushed into the scan — running
@@ -1352,10 +1334,11 @@ object Pipeline {
     // read+tokenize pass total — the r14 profile showed the old separate
     // stats pre-pass re-tokenizing the whole corpus per run, a second full
     // scan a 100 TB corpus cannot afford. FT-safe.
-    val postings = graft.core.GraftSession.pin(c
-      .select(col("doc_id"), col("dl"), explode_outer(col("__toks")).as("term"))
-      .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf")))
+    val postings = graft.core.GraftSession.pin(
+      Bm25.docTokens(corpus, corpusIdCol, corpusTextCol)
+        .select(col("doc_id"), col("dl"), explode_outer(col("__toks")).as("term"))
+        .groupBy(col("doc_id"), col("dl"), col("term"))
+        .agg(count(lit(1)).as("tf")))
     // corpus stats from the PINNED postings: distinct (doc_id, dl) is one
     // cheap agg over in-memory data, not a corpus re-scan
     val stats = postings.select(col("doc_id"), col("dl")).distinct()
@@ -1363,36 +1346,8 @@ object Pipeline {
     val totalT = stats.getLong(0)
     val n = stats.getLong(1)
     require(n > 0, "empty corpus")
-    val terms = postings.filter(col("term").isNotNull)
-    val dfTable = terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val qterms = queries.filter(col(queryTextCol).isNotNull)
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        explode_outer(graft.functions.tokens_fast(
-          coalesce(col(queryTextCol), lit("")))).as("term"))
-      .filter(col("term").isNotNull)
-      .distinct()
-    val qlogScale = 16L * (63 - java.lang.Long.numberOfLeadingZeros(Bm25Scale))
-    val qti = dfTable.join(broadcast(qterms), "term")
-      .withColumn("__r", expr(
-        s"${Bm25Scale}L + (2 * ${n}L - 2 * df + 1) * ${Bm25Scale}L DIV (2 * df + 1)"))
-      .withColumn("idf_q", expr(qlog2Sql("__r")) - lit(qlogScale))
-      // zero-weight terms (df so high the quantized idf floors to 0 —
-      // stop words) contribute 0 to every score but would still fan out
-      // the postings join; dropping them is exactly score-preserving
-      .filter(col("idf_q") > 0)
-      .select(col("query_id"), col("term"), col("idf_q"))
-    // __sat (the tf/dl saturation quotient) depends only on the posting,
-    // never the query — compute it once per posting row, not once per
-    // (posting × query) fanout row (guide §2.3; the RetrievalIndex twin
-    // measured the fanout at 59× the posting count on hot-term query
-    // batches). Same integer expression, same values.
-    terms.withColumn("__sat", expr(
-        s"(44 * tf * ${totalT}L * 16) DIV (20 * tf * ${totalT}L + 6 * ${totalT}L + 18 * dl * ${n}L)"))
-      .join(broadcast(qti), "term")
-      .withColumn("__sc", col("idf_q") * col("__sat"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("__sc")).cast("long").as("score"))
-      .filter(col("score") > 0)
+    Bm25.score(postings.filter(col("term").isNotNull),
+      Bm25.queryTerms(queries, queryIdCol, queryTextCol), n, totalT, byDoc = false)
   }
 
   /** Retrieval-based decontamination: drop every training doc a held-out

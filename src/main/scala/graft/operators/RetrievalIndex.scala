@@ -33,11 +33,10 @@ import graft.core.GenDir
   * the accumulated corpus — not approximately: the index stores (tf, dl)
   * per posting and (docs, tokens) per mass, and df/idf are re-derived
   * from the LIVE postings at serve time, so an append never stales a
-  * score the way an IVF append stales a codebook. idf/saturation use the
-  * same integer-quantized arithmetic as [[Pipeline.bm25Scores]]
-  * ([[Pipeline.Bm25Scale]]/[[Pipeline.qlog2Sql]] — one scorer, two data
-  * paths), so serve-from-index is hash-identical to fresh, which is what
-  * lets one DuckDB oracle gate both (q113 vs q174). Rebuild is therefore
+  * score the way an IVF append stales a codebook. Scoring is
+  * [[Bm25.score]], the scorer [[Pipeline.bm25Scores]] runs, so
+  * serve-from-index is hash-identical to fresh, which is what lets one
+  * DuckDB oracle gate both (q113 vs q174). Rebuild is therefore
   * pure DEFRAGMENTATION (each append adds one directory tree and one
   * union leg per batch), exactly the minhash/phash discipline.
   *
@@ -88,16 +87,10 @@ object RetrievalIndex {
 
   /** One row per (doc, distinct term): (term, doc_id, tf, dl, pb), plus
     * the corpus-stat delta (docs, tokens) counted over ALL non-null-text
-    * docs — empty docs carry no posting row but must enter `docs`. Same
-    * null surgery as [[Pipeline.bm25Scores]]: coalesce keeps the
-    * tokenize kernel non-nullable so constraint propagation cannot clone
-    * it into a filter. */
+    * docs. */
   private def postingsOf(df: DataFrame, idCol: String, textCol: String,
       parts: Int): (DataFrame, DataFrame) = {
-    val toks = df.filter(col(textCol).isNotNull)
-      .select(col(idCol).cast("long").as("doc_id"),
-        graft.functions.tokens_fast(coalesce(col(textCol), lit(""))).as("__toks"))
-      .withColumn("dl", size(col("__toks")).cast("long"))
+    val toks = Bm25.docTokens(df, idCol, textCol)
     val stats = toks.agg(count(lit(1)).as("docs"),
       coalesce(sum(col("dl")), lit(0L)).as("tokens"))
     val rows = toks
@@ -270,11 +263,6 @@ object RetrievalIndex {
     GenDir.commit(spark, path, gen)
   }
 
-  /** The scored (query_id, doc_id, score > 0) set against the index —
-    * [[Pipeline.bm25Scores]] served from the persisted postings, exact
-    * to the last bit. The query batch is the small side by contract; the
-    * only driver-side materialization is the DISTINCT `pb` bucket list
-    * (≤ `parts` ints — bounded by the index layout, not the data). */
   /** The query-term table and the partition-pruned posting rows behind
     * [[scores]] — split out so the pruning contract (`pb IN (...)` lands
     * in the scan's PARTITION filters, not a post-scan data filter) is
@@ -285,12 +273,7 @@ object RetrievalIndex {
     val g = cur(spark, path)
     val (parts, n, totalT) = liveStats(spark, g)
     require(n > 0, "empty index")
-    val qterms = queries.filter(col(queryTextCol).isNotNull)
-      .select(col(queryIdCol).cast("long").as("query_id"),
-        explode_outer(graft.functions.tokens_fast(
-          coalesce(col(queryTextCol), lit("")))).as("term"))
-      .filter(col("term").isNotNull)
-      .distinct()
+    val qterms = Bm25.queryTerms(queries, queryIdCol, queryTextCol)
     // bounded driver collect (COVERAGE.md inventory): DISTINCT pb values
     // of the query terms — at most `parts` ints regardless of batch size
     val pbs = qterms
@@ -301,6 +284,11 @@ object RetrievalIndex {
     (qterms, liveRows(spark, g).filter(col("pb").isin(pbs: _*)), n, totalT)
   }
 
+  /** The scored (query_id, doc_id, score > 0) set against the index —
+    * [[Pipeline.bm25Scores]] served from the persisted postings, exact
+    * to the last bit. The query batch is the small side by contract; the
+    * only driver-side materialization is the DISTINCT `pb` bucket list
+    * (≤ `parts` ints — bounded by the index layout, not the data). */
   def scores(queries: DataFrame, queryIdCol: String, queryTextCol: String,
       path: String): DataFrame = {
     val (qterms, pruned, n, totalT) =
@@ -311,74 +299,33 @@ object RetrievalIndex {
     // discipline below keys on, for free)
     val (matched, matchedRows) = graft.core.GraftSession.pinCounted(
       pruned.join(broadcast(qterms.select(col("term")).distinct()), Seq("term")))
-    val dfTable = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val qlogScale = 16L * (63 - java.lang.Long.numberOfLeadingZeros(Pipeline.Bm25Scale))
-    val qti = dfTable.join(broadcast(qterms), "term")
-      .withColumn("__r", expr(
-        s"${Pipeline.Bm25Scale}L + (2 * ${n}L - 2 * df + 1) * " +
-          s"${Pipeline.Bm25Scale}L DIV (2 * df + 1)"))
-      .withColumn("idf_q", expr(Pipeline.qlog2Sql("__r")) - lit(qlogScale))
-      .filter(col("idf_q") > 0)
-      .select(col("query_id"), col("term"), col("idf_q"))
     // hot-term fanout discipline (r17; optimization guide §2.3/§2.4):
-    // the qti join fans every posting row out once per query containing
-    // its term — 70.4M rows from 1.2M matched postings at the 10× stress
-    // serve (common terms have df ≈ 0.6·corpus and appear in most
-    // queries). Two exact-preserving moves keep that volume off the
-    // expensive paths:
-    //  - __sat (the tf/dl saturation quotient) depends only on the
-    //    posting, so it is computed ONCE per matched row, not once per
-    //    fanout row;
-    //  - when the matched mass is large, it is hash-repartitioned by
-    //    doc_id BEFORE the fanout: HashPartitioning(doc_id) satisfies
-    //    the per-(query_id, doc_id) sum's ClusteredDistribution, so the
-    //    fanout rows are aggregated WHERE THEY ARE PRODUCED — no
-    //    exchange of the fanout, and each task's aggregation map holds
-    //    only its own docs' pairs instead of a spilling 5M-group
-    //    partial map (the r17 JFR profile: BytesToBytesMap
-    //    growAndRehash + spill writes dominated the serve). Measured on
-    //    the stress serve: 8.4 s → ~2 s for the score aggregation.
-    //    Partition count rides spark.sql.shuffle.partitions / AQE
-    //    (scale-adaptive, not a local constant); sum(long) is
-    //    order-independent, so values are bit-identical either way
-    //    (oracle-gated q174/q176 — BOTH branches pass).
-    //    The engage cutoff is the pin's EXACT row count (data-driven,
-    //    never core-count-driven): below it the extra exchange costs
-    //    more than the no-shuffle agg saves — measured at gate SF
-    //    (q176: matched 115k / fanout 4.4M, repartition +0.4 s wall,
-    //    sys-heavy exchange on small data) and at the 10× stress serve
-    //    (matched 1.2M / fanout 70M, repartition −6 s) — with ~4–10×
-    //    margin to the cutoff on each side; a 100 TB serve is always
-    //    far above it.
-    val scoring = matched
-      .withColumn("__sat", expr(
-        s"(44 * tf * ${totalT}L * 16) DIV " +
-          s"(20 * tf * ${totalT}L + 6 * ${totalT}L + 18 * dl * ${n}L)"))
-    val placed =
-      if (matchedRows >= FanoutRepartitionMinRows)
-        scoring.repartition(col("doc_id"))
-      else scoring
-    placed
-      .join(broadcast(qti), "term")
-      .withColumn("__sc", col("idf_q") * col("__sat"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("__sc")).cast("long").as("score"))
-      .filter(col("score") > 0)
+    // the scoring join fans every posting row out once per query
+    // containing its term — 70.4M rows from 1.2M matched postings at the
+    // 10× stress serve (common terms have df ≈ 0.6·corpus and appear in
+    // most queries). When the matched mass is large, Bm25.score
+    // hash-repartitions it by doc_id BEFORE the fanout, so each task's
+    // aggregation map holds only its own docs' pairs instead of a
+    // spilling 5M-group partial map (the r17 JFR profile:
+    // BytesToBytesMap growAndRehash + spill writes dominated the serve).
+    // Measured on the stress serve: 8.4 s → ~2 s for the score
+    // aggregation; oracle-gated q174/q176 pass on BOTH branches.
+    // The engage cutoff is the pin's EXACT row count (data-driven,
+    // never core-count-driven): below it the extra exchange costs more
+    // than the no-shuffle agg saves — measured at gate SF (q176: matched
+    // 115k / fanout 4.4M, repartition +0.4 s wall, sys-heavy exchange on
+    // small data) and at the 10× stress serve (matched 1.2M / fanout
+    // 70M, repartition −6 s) — with ~4–10× margin to the cutoff on each
+    // side; a 100 TB serve is always far above it.
+    Bm25.score(matched, qterms, n, totalT,
+      byDoc = matchedRows >= FanoutRepartitionMinRows)
   }
 
   /** BM25 top-k against the index — [[Pipeline.bm25TopK]] served from
     * the persisted postings, identical ranking. */
   def topK(queries: DataFrame, queryIdCol: String, queryTextCol: String,
-      path: String, k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    scores(queries, queryIdCol, queryTextCol, path)
-      .groupBy(col("query_id"))
-      .agg(graft.functions.top_k(
-        struct(col("score"), (-col("doc_id")).as("nid")), k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__i", "__s")))
-      .select(col("query_id"), (col("__i") + 1).cast("int").as("rnk"),
-        (-col("__s.nid")).as("doc_id"), col("__s.score"))
-  }
+      path: String, k: Int): DataFrame =
+    Bm25.topK(k)(scores(queries, queryIdCol, queryTextCol, path))
 
   /** Remove the index (gate cleanup). */
   def drop(spark: SparkSession, path: String): Unit = {

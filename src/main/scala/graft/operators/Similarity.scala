@@ -371,7 +371,7 @@ object Similarity {
     * (k-means wants tens of points per centroid to be trainable; at
     * 100 TB the √N term is always the binding one). The ~5 % scan point
     * (nprobe ≈ nlist/20) measures recall 1.0 on the clustered 10×-sf0.1
-    * stress corpus (IvfGrid stress; ScaleStressSpec pins ≥ 0.8).
+    * stress corpus (STRESS.md grid rows; ScaleStressSpec pins ≥ 0.8).
     * Explicit nlist > 0 overrides. */
   private[graft] def autoNlist(count: Long): Int =
     math.max(16, math.min(count / 16, math.min(1L << 16,

@@ -21,33 +21,33 @@ package graft.sources.hub
 object Clients {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** Resolve an implementation by fully-qualified name — a Scala `object`
-    * (natural name or mangled `Obj$` form, via MODULE$) or a no-arg
-    * class — cached per JVM. A Scala object's natural name resolves to
-    * its mirror class (no MODULE$, no usable constructor), so retry with
-    * the `$`-suffixed companion-module class before concluding the name
-    * denotes an instantiable class. */
-  def byName[T](name: String): T =
-    cache.computeIfAbsent(name, n => {
+  /** Resolve an implementation of `T` by fully-qualified name — a Scala
+    * `object` (natural name or mangled `Obj$` form, via MODULE$) or a
+    * no-arg class — cached per JVM. The candidates are tried in that
+    * order and the first that IS a `T` wins: a Scala object's natural
+    * name resolves to its mirror class (no MODULE$, no usable
+    * constructor), so the `$`-suffixed module class is tried next; a
+    * class with a companion object also has that module class, but the
+    * companion is not a `T`, so the class itself is instantiated. */
+  def byName[T](name: String)(implicit tag: scala.reflect.ClassTag[T]): T =
+    cache.computeIfAbsent(name, _ => {
       def module(cls: Class[_]): Option[AnyRef] =
         try Some(cls.getField("MODULE$").get(null))
         catch { case _: NoSuchFieldException => None }
-      val cls = Class.forName(n)
-      module(cls)
-        .orElse(
-          try module(Class.forName(n + "$"))
-          catch { case _: ClassNotFoundException => None })
-        .getOrElse {
-          try cls.getDeclaredConstructor().newInstance().asInstanceOf[AnyRef]
-          catch {
-            case e @ (_: NoSuchMethodException | _: InstantiationException) =>
-              throw new IllegalArgumentException(
-                s"client '$n' is neither a Scala object (no MODULE$$ on " +
-                  s"'$n' or '$n$$') nor a no-arg class — for a Scala " +
-                  "object, either name form works; for a class it needs " +
-                  "a public no-arg constructor", e)
-          }
-        }
+      val cls = Class.forName(name)
+      val candidates = Iterator(
+        () => module(cls),
+        () => try module(Class.forName(name + "$"))
+          catch { case _: ClassNotFoundException => None },
+        () => try Some(cls.getDeclaredConstructor().newInstance().asInstanceOf[AnyRef])
+          catch { case _: NoSuchMethodException | _: InstantiationException => None })
+      candidates.flatMap(_()).find(tag.runtimeClass.isInstance).getOrElse {
+        throw new IllegalArgumentException(
+          s"client '$name' is neither a Scala object (MODULE$$ on '$name' " +
+            s"or '$name$$') nor a no-arg class implementing " +
+            s"${tag.runtimeClass.getName} — for a Scala object, either name " +
+            "form works; for a class it needs a public no-arg constructor")
+      }
     }).asInstanceOf[T]
 
   /** Test hook: drop a cached instance (e.g. after re-registering). */

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Attribution probe for per-rep codegen recompilation (the round-9 q81
   * bench-spike hunt): build the SAME catalog query twice, dump each run's
   * whole-stage-codegen sources, and report which units' source text
@@ -13,13 +11,7 @@ object CodegenDiff {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     graft.core.GraftSession.prepare(spark)
     val fn = graft.SparkEntry.queries(name)
     def sources(): Seq[String] = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-JOB timeline for one catalog query — the attribution tool for
   * NEAR-SERIAL queries (wall ≫ cpu_s/threads with a many-jobs `jobs`
   * channel in bench_detail.json): prints every job the rep ran with its
@@ -19,13 +17,7 @@ object JobTrace {
     val sfDir = args(0)
     val reps = args(1).toInt
     val name = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     val fn = graft.SparkEntry.queries(name)
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // warm once: fixture seeding + codegen outside the traced rep

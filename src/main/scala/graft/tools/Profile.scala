@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeat-timer for individual catalog queries: min of N hot runs, so
   * Janino/codegen compile and first-touch parquet costs don't masquerade as
   * operator cost. Usage: runMain graft.tools.Profile <sfDir> <reps> [names…]
@@ -11,13 +9,7 @@ object Profile {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
     val names = if (args.length > 2) args.drop(2).toSeq else graft.SparkEntry.queries.keys.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Within-session rep-stability harness: run the named catalog queries N
   * times back-to-back in ONE session and print each rep's seconds — the
   * measurement that exposed the round-7 pin leak (q81 reps ramping
@@ -21,15 +19,7 @@ object RepTimer {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
     val reps = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf, must be on the builder: see GraftSession.configure
-      .config("spark.sql.codegen.cache.maxEntries", "12000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     graft.core.GraftSession.prepare(spark)
     // release=0 reproduces the pre-round-9 harness (no post-rep release)
     // for A/B attribution of rep ramps to dead-pin storage pressure

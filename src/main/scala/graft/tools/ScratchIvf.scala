@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.Similarity
@@ -10,16 +9,10 @@ import graft.operators.Similarity
   * (full - train - count) isolates the assignment+partitioned-write
   * tail. The r16 evidence for the widen+fan-by-bucket build change:
   * full build 26-42 s -> 3.3-5.2 s same-host while train stayed
-  * 0.3-1.6 s. Not part of any gate (the IvfProfile convention). */
+  * 0.3-1.6 s. Not part of any gate. */
 object ScratchIvf {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     graft.core.GraftSession.prepare(spark)
     val dir = StressData.ensure(spark)
     val emb = Tables.load(spark, dir, "embeddings")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.{Media, PhashIndex, RetrievalIndex}
@@ -18,13 +17,7 @@ object ScratchServe {
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("phash,bm25").split(',').toSet
     val reps = sys.env.getOrElse("SCRATCH_REPS", "7").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness()
     graft.core.GraftSession.prepare(spark)
     val dir = StressData.ensure(spark)
     val docs = Tables.load(spark, dir, "documents")

@@ -35,12 +35,17 @@ class HyperLogLogSpec extends AnyFunSuite {
   }
 
   test("precision bounds enforced like ProbabilisticAggregations.java:61-63") {
+    import graft.functions.hll_sketch
     val df = Seq(1L).toDF("v")
-    intercept[Exception] {
-      df.agg(hyper_log_log(col("v"), 3)).collect()
-    }
-    intercept[Exception] {
-      df.agg(hyper_log_log(col("v"), 17)).collect()
+    for (p <- Seq(3, 17)) {
+      val e1 = intercept[Exception] {
+        df.agg(hyper_log_log(col("v"), p)).collect()
+      }
+      assert(e1.getMessage.contains(s"hyper_log_log precision must be in [4, 16], got $p"))
+      val e2 = intercept[Exception] {
+        df.agg(hll_sketch(col("v"), p)).collect()
+      }
+      assert(e2.getMessage.contains(s"hll_sketch precision must be in [4, 16], got $p"))
     }
   }
 
@@ -48,10 +53,13 @@ class HyperLogLogSpec extends AnyFunSuite {
     import graft.functions.{hll_merge, hll_sketch}
     val df = (1L to 40000L).toDF("v")
       .select((col("v") % 12).as("g"), hash64(col("v")).as("h"))
-    val direct = df.agg(hyper_log_log(col("h"), 12)).head().getLong(0)
-    val merged = df.groupBy("g").agg(hll_sketch(col("h"), 12).as("sk"))
-      .agg(hll_merge(col("sk"))).head().getLong(0)
-    assert(merged == direct, s"sketch round-trip changed the estimate: $merged vs $direct")
+    for (p <- Seq(4, 12, 14, 16)) {
+      val direct = df.agg(hyper_log_log(col("h"), p)).head().getLong(0)
+      val merged = df.groupBy("g").agg(hll_sketch(col("h"), p).as("sk"))
+        .agg(hll_merge(col("sk"))).head().getLong(0)
+      assert(merged == direct,
+        s"p=$p: sketch round-trip changed the estimate: $merged vs $direct")
+    }
   }
 
   test("tracks approx_count_distinct on grouped data") {

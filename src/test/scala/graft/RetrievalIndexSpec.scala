@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GenDir
+import graft.core.{GenDir, GraftSession}
 import graft.operators.{Pipeline, RetrievalIndex}
 
 /** The persisted BM25 postings index behind q174/q175: serve-from-index
@@ -15,7 +15,7 @@ import graft.operators.{Pipeline, RetrievalIndex}
   * defragmentation, and a serve only reads the query terms' `pb`
   * partition dirs. */
 class RetrievalIndexSpec extends AnyFunSuite {
-  lazy val spark = graft.core.GraftSession.local(4)
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   // overlapping vocab so rankings are nontrivial; one empty and one
@@ -36,15 +36,26 @@ class RetrievalIndexSpec extends AnyFunSuite {
     (12L, "says who says what says the lazy red dog")
   ).toDF("doc_id", "text")
 
+  // the last three are degenerate queries: a null one and one whose every
+  // term is out of the corpus vocabulary score nothing on either path; an
+  // empty one tokenizes like split(trim(""), ...) — the oracle's rule — to
+  // the single token "", which only the empty-text doc 8 also carries
   private def queriesDf = Seq(
     (100L, "quick brown fox"),
     (101L, "red hill sun"),
-    (102L, "lazy dog day")
+    (102L, "lazy dog day"),
+    (103L, null.asInstanceOf[String]),
+    (104L, ""),
+    (105L, "zebra quasar xylophone")
   ).toDF("qid", "qtext")
+  private val ScorelessQids = Set(103L, 105L)
+  private val EmptyQid = 104L
 
+  /** Collect, then free the frame's pins: the collect was its last action. */
   private def rows(df: DataFrame): Set[(Long, Int, Long, Long)] =
-    df.collect().map(r =>
+    try df.collect().map(r =>
       (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    finally GraftSession.release(df)
 
   private def fresh(c: DataFrame): Set[(Long, Int, Long, Long)] =
     rows(Pipeline.bm25TopK(queriesDf, c, "qid", "qtext", "doc_id", "text", k = 4))
@@ -76,6 +87,8 @@ class RetrievalIndexSpec extends AnyFunSuite {
     RetrievalIndex.append(b, "doc_id", "text", path, "b1")
     val full = fresh(corpus)
     assert(served(path) == full, "append folds in exactly (crash debris replaced)")
+    assert(full.nonEmpty && !full.exists(r => ScorelessQids(r._1)))
+    assert(full.filter(_._1 == EmptyQid).map(_._3) == Set(8L))
     val st1 = RetrievalIndex.staleness(spark, path).head()
     assert(st1.getLong(0) == 7L && st1.getLong(1) == 4L,
       s"built counts non-null-text docs of the base (incl. the empty one), " +
@@ -104,7 +117,8 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val path = tmp("scores")
     RetrievalIndex.build(corpus, "doc_id", "text", path, parts = 8)
     def norm(df: DataFrame): Set[(Long, Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      try df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      finally GraftSession.release(df)
     val freshScores = norm(Pipeline.bm25Scores(
       queriesDf, corpus, "qid", "qtext", "doc_id", "text")
       .select(col("query_id"), col("doc_id"), col("score")))
@@ -112,6 +126,10 @@ class RetrievalIndexSpec extends AnyFunSuite {
       .select(col("query_id"), col("doc_id"), col("score")))
     assert(servedScores == freshScores)
     assert(freshScores.nonEmpty)
+    assert(!freshScores.exists(r => ScorelessQids(r._1)),
+      s"null and out-of-vocabulary queries score nothing: $freshScores")
+    assert(freshScores.filter(_._1 == EmptyQid).map(_._2) == Set(8L),
+      s"the empty query matches the empty-text doc only: $freshScores")
     RetrievalIndex.drop(spark, path)
   }
 
@@ -151,10 +169,13 @@ class RetrievalIndexSpec extends AnyFunSuite {
     import graft.operators.RetrievalIndex.{FanoutRepartitionMinRows, DefaultFanoutRepartitionMinRows}
     val path = tmp("fanout")
     RetrievalIndex.build(corpus, "doc_id", "text", path, parts = 8)
-    def planOf(): String = RetrievalIndex
-      .scores(queriesDf, "qid", "qtext", path)
-      .queryExecution.explainString(
+    def planOf(): String = {
+      val df = RetrievalIndex.scores(queriesDf, "qid", "qtext", path)
+      try df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
+      finally GraftSession.release(df)
+    }
+    val persisted0 = spark.sparkContext.getPersistentRDDs.keySet
     try {
       RetrievalIndex.FanoutRepartitionMinRows = Long.MaxValue
       val below = served(path)
@@ -169,6 +190,8 @@ class RetrievalIndexSpec extends AnyFunSuite {
       assert(above == fresh(corpus), "and still exact vs the fresh scorer")
     } finally RetrievalIndex.FanoutRepartitionMinRows = DefaultFanoutRepartitionMinRows
     assert(FanoutRepartitionMinRows == DefaultFanoutRepartitionMinRows)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persisted0
+    assert(leaked.isEmpty, s"pins the test's frames built are still cached: $leaked")
   }
 
   test("empty-delta append stays readable and WARN-quiet") {
